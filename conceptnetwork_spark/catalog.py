@@ -8,14 +8,26 @@ the reference hand-rolled these with TF queue runners
 
 Dimension tables are flagged so the operator layer can attach explicit
 broadcast hints for the 100 TB design point (facts never broadcast).
+
+Schemas are inferred once per file per process (``parquet_schema``). A bare
+``spark.read.parquet`` launches a Spark job that reads a footer to infer the
+schema, and every builder constructs a fresh ``Catalog``, so without a cache
+that job is paid on every query. The rule: the first open of a file in a
+process pays one inference job, and later opens from any session pay none
+(the cache holds plain ``StructType`` values, so it outlives
+``spark.stop()``). An entry is valid while the path's leaf files keep their
+names, sizes and mtimes and the session's schema-inference confs keep their
+values; anything else re-infers.
 """
 
 from __future__ import annotations
 
+import copy
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -54,6 +66,66 @@ def fix_nanos(df: DataFrame, name: str) -> DataFrame:
         elif dt == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
+
+
+# Every SQL conf that changes the schema Spark infers for a Parquet path:
+# the ones its Parquet->Catalyst converter reads (ParquetToSparkSchemaConverter
+# and its variant check, Spark 4.1), plus the two that choose which footers
+# are read and merged.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+
+# (real path, conf values) -> (leaf-file fingerprint, inferred schema). One
+# entry per path and conf set: a changed file set replaces its entry. Each
+# access is a single dict operation; two threads missing at once both infer
+# and the last store wins, which is harmless.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _leaf_files(path: str) -> tuple[tuple[str, int, int], ...]:
+    """(relative name, size, mtime_ns) of every file under ``path``, or of
+    ``path`` itself when it is a file."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    leaves = []
+    for d, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(d, f)
+            st = os.stat(full)
+            leaves.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(leaves))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred by Spark once
+    per process for as long as the path's files and the session's
+    schema-inference confs are unchanged (module docstring). Paths that are
+    not on the local filesystem (URIs, globs) are inferred on every call.
+
+    The returned ``StructType`` is the caller's own copy."""
+    real = os.path.realpath(path)
+    if not os.path.exists(real):
+        return spark.read.parquet(path).schema
+    slot = (real, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    files = _leaf_files(real)
+    hit = _SCHEMAS.get(slot)
+    if hit is not None and hit[0] == files:
+        return copy.deepcopy(hit[1])
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[slot] = (files, schema)
+    return copy.deepcopy(schema)
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -123,7 +195,9 @@ class Catalog:
         if name not in TABLES:
             raise KeyError(f"unknown table {name!r}; known: {TABLES}")
         if name not in self._cache:
-            df = self.spark.read.parquet(self.path(name))
+            path = self.path(name)
+            schema = parquet_schema(self.spark, path)
+            df = self.spark.read.schema(schema).parquet(path)
             self._cache[name] = fix_nanos(df, name)
         return self._cache[name]
 

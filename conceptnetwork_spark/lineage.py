@@ -34,10 +34,14 @@ LEAKCHECK's repeated-invocation sweep covers it.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame
 
-_CHECKPOINT_DIR_SET = False
+# SparkContext -> the reliable directory it was given. Keyed on the context,
+# not the process: a stopped session's context takes its checkpoint dir with
+# it, and a second session in the same process needs setCheckpointDir again.
+_CHECKPOINT_DIRS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -52,9 +56,9 @@ def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """
     reliable_dir = os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT")
     if reliable_dir:
-        global _CHECKPOINT_DIR_SET
-        if not _CHECKPOINT_DIR_SET:
-            df.sparkSession.sparkContext.setCheckpointDir(reliable_dir)
-            _CHECKPOINT_DIR_SET = True
+        sc = df.sparkSession.sparkContext
+        if _CHECKPOINT_DIRS.get(sc) != reliable_dir:
+            sc.setCheckpointDir(reliable_dir)
+            _CHECKPOINT_DIRS[sc] = reliable_dir
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

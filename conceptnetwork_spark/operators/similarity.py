@@ -1314,8 +1314,9 @@ def d30_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     final, tiny fusion join."""
     from conceptnetwork_spark.operators.text import bm25_scores
 
-    d = Catalog(spark, sf_dir).documents
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cat = Catalog(spark, sf_dir)
+    d = cat.documents
+    emb = cat.embeddings
 
     wl = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     lex = (

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from conceptnetwork_spark.catalog import Catalog
 from conceptnetwork_spark.registry import register
 
 SYNTH_N = 20_000
@@ -332,7 +333,7 @@ def d01_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     outdir = _tempfile.mkdtemp(prefix="cn_jsonlsink_")
     _atexit.register(_shutil.rmtree, outdir, ignore_errors=True)
     o = (
-        spark.read.parquet(_os.path.join(sf_dir, "orders.parquet"))
+        Catalog(spark, sf_dir).orders
         .where(F.col("o_orderkey") < 3000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .repartition(4)

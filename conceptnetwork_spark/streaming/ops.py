@@ -23,7 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog, fix_nanos
+from conceptnetwork_spark.catalog import Catalog, fix_nanos, parquet_schema
 from conceptnetwork_spark.registry import register
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -68,7 +68,7 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     """readStream over the events parquet, nanos-ts converted in-plan
     (same fix_nanos as the batch catalog so both sides agree)."""
     ev_path = Catalog(spark, sf_dir).path("events")
-    schema = spark.read.parquet(ev_path).schema
+    schema = parquet_schema(spark, ev_path)
     # glob suffix: the streaming file source requires a directory/glob, and
     # the testdata lays each table out as a single parquet file
     return fix_nanos(
@@ -818,7 +818,7 @@ def d25_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
             shutil.rmtree(tmp, ignore_errors=True)
 
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     src = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(stage)
@@ -1007,7 +1007,7 @@ def d26_append_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     state size — the eviction this query observes is exactly the mechanism
     that keeps a 100 TB out-of-order stream's state finite."""
     stage = _stage_late_arrival(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     stream = fix_nanos(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1155,7 +1155,7 @@ def d25_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join feasible at all, and the outer emission latency IS the watermark
     delay (the price of correct null semantics under out-of-order data)."""
     stage = _stage_outer_join(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
 
     def src():
         return fix_nanos(
@@ -1253,7 +1253,7 @@ def d25_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     choosing semi over inner-then-distinct on a 100 TB stream: the
     dedup happens IN the join state, not as a second stateful stage."""
     stage = _stage_outer_join(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
 
     def src():
         return fix_nanos(
@@ -1455,7 +1455,7 @@ def d28_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-watermark variant's state is bounded by keys-per-delay-window,
     which is what a 100 TB/day event stream needs."""
     stage = _stage_ddw(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     src = fix_nanos(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1645,7 +1645,7 @@ def d26_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink must be keyed-upsert-capable, exactly what the readout
     models."""
     stage = _stage_parity_batches(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     stream = fix_nanos(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1729,7 +1729,7 @@ def d26_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle between the stages carries hourly partials, ~3 orders of
     magnitude fewer rows than events at 100 TB."""
     stage = _stage_late_arrival(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     stream = fix_nanos(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1828,7 +1828,7 @@ def d25_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     second null-emission scan at eviction time. user_id is carried from
     whichever side is present (COALESCE in the readout)."""
     stage = _stage_outer_join(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
 
     def src():
         return fix_nanos(
@@ -2008,7 +2008,7 @@ def d25_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     (delay + interval per side); choosing left vs right outer is a
     semantics decision, not a cost one."""
     stage = _stage_outer_join(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
 
     def src():
         return fix_nanos(
@@ -2145,7 +2145,7 @@ def d26_late_drop_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: metrics come from StreamingQueryProgress (driver-side,
     O(batches) tiny dicts) — zero extra data-path cost."""
     stage = _stage_late_metrics(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     table = f"latem_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
     agg = (
@@ -2344,7 +2344,7 @@ def run_session_stream_on_stage(spark: SparkSession, stage: str) -> DataFrame:
     chunk directory — split out so the boundary-tie pin
     (tests/test_streaming.py) can replay a CONSTRUCTED fixture whose
     session end coincides with the final watermark to the millisecond."""
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -2454,7 +2454,7 @@ def d26_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combined before state commit, exactly like the batch twin's
     partial agg."""
     stage = _stage_time_chunks_cached(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from conceptnetwork_spark.catalog import Catalog, fix_nanos
+from conceptnetwork_spark.catalog import Catalog, fix_nanos, parquet_schema
 from conceptnetwork_spark.registry import register
 from conceptnetwork_spark.streaming.ops import await_finished
 
@@ -120,7 +120,7 @@ def run_stateful_totals(
     a single-batch run would never exercise ``state.exists``.
     """
     stage = stage_event_files(spark, sf_dir, n_files)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     stream = fix_nanos(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -321,7 +321,7 @@ def _run_tws_update_log(
             import shutil
 
             shutil.rmtree(tmp, ignore_errors=True)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     stream = fix_nanos(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -761,7 +761,7 @@ def run_cohort_maturation(
             pass
 
     stage = _stage_time_chunks(spark, sf_dir, TWS_TIMER_FILES)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -897,7 +897,7 @@ def d25_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     stage = stage_event_files(spark, sf_dir, 4)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     stream = fix_nanos(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1001,7 +1001,7 @@ def d25_state_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from conceptnetwork_spark.streaming.ops import scoped_state_partitions
 
     stage = _stage_time_chunks(spark, sf_dir, 3)
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     stream = fix_nanos(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -40,9 +40,6 @@ def test_lineage_cut_reliable_switch(spark, tmp_path, monkeypatch):
     lands under the directory once materialized."""
     ckpt_dir = str(tmp_path / "reliable_ckpt")
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", ckpt_dir)
-    import conceptnetwork_spark.lineage as lineage
-
-    monkeypatch.setattr(lineage, "_CHECKPOINT_DIR_SET", False)
     base = _grouped(spark)
     cut = base.transform(lineage_cut)
     assert sorted(cut.collect()) == sorted(base.collect())
@@ -148,3 +145,48 @@ def test_vectorized_series_kernels_match_scalar_loops(spark):
     }
     assert holt_out == holt_ref
     assert kalman_out == kalman_ref
+
+
+SECOND_SESSION = r"""
+import sys
+from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.lineage import lineage_cut
+from conceptnetwork_spark.session import get_spark
+from tests.test_catalog import jobs_launched
+
+sf = sys.argv[1]
+spark = get_spark(app_name="first")
+Catalog(spark, sf).table("orders")
+assert spark.range(10).transform(lineage_cut).count() == 10
+spark.stop()
+
+spark = get_spark(app_name="second")
+assert spark.range(10).transform(lineage_cut).count() == 10
+print("open_jobs", jobs_launched(spark, lambda: Catalog(spark, sf).table("orders")))
+spark.stop()
+"""
+
+
+def test_second_session_in_process(tmp_path):
+    """Stop the session and start a new one in the same process: a reliable
+    lineage cut sets the new context's checkpoint dir, and reopening a
+    catalog table reuses the schema the first session inferred (0 jobs)."""
+    import subprocess
+    import sys
+
+    from tests.conftest import SF_SMOKE
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_RELIABLE_CHECKPOINT=str(tmp_path / "ckpt"),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", SECOND_SESSION, SF_SMOKE],
+        env=env, cwd=root, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "open_jobs 0" in out.stdout.splitlines()
