@@ -10,8 +10,11 @@ negative/zero/denormal-ish doubles, duplicate collisions), not volume.
 
 from __future__ import annotations
 
+import itertools
+
 import duckdb
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -1175,3 +1178,28 @@ def test_soft_dedup_weights_cover_and_bound(spark):
         assert 0.0 < r.weight <= 1.0, r
         if r.n_dup_blocks == 0:
             assert r.weight == 1.0 and r.kept, r
+
+
+# ---------------------------------------------------------------------------
+# TFRecord framing: a batch frames and splits back to the same records, each
+# record's CRC does not depend on the batch it is computed in, and any cut
+# inside a record is reported as truncation.
+# ---------------------------------------------------------------------------
+@given(
+    recs=st.lists(st.binary(max_size=300), max_size=40),
+    cut=st.integers(min_value=0),
+)
+@settings(max_examples=100, deadline=None)
+def test_tfrecord_framing_round_trip(recs, cut):
+    from conceptnetwork_spark.sources import tfrecord as tfr
+
+    framed = tfr.frame_records(recs)
+    assert tfr.split_records(framed) == recs
+    assert [int(c) for c in tfr.crc32c_many(recs)] == [tfr.crc32c(r) for r in recs]
+    bounds = set(itertools.accumulate((16 + len(r) for r in recs), initial=0))
+    cut %= len(framed) + 1
+    if cut in bounds:
+        assert tfr.split_records(framed[:cut]) == recs[: sorted(bounds).index(cut)]
+    else:
+        with pytest.raises(ValueError, match="truncated"):
+            tfr.split_records(framed[:cut])
